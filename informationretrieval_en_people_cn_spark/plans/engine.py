@@ -539,20 +539,52 @@ class SearchEngine:
         # off and planning stays as (pruned, tiny) Spark jobs.
         self.term_stats: dict[str, tuple[int, int]] | None = None
         self._term_arr: list[str] | None = None
-        if self._cache_term_stats:
+        # driver posting store (term -> its compressed frames): the
+        # fast path decodes from it instead of running a pruned scan
+        # job per query.  Loaded only when the whole index's
+        # Σdf — bounded by collection_term_count = Σdoclen — fits the
+        # per-query fast_max_postings budget, so it never holds more
+        # postings than one query at the edge of that budget decodes.
+        self._frames: dict[str, bytes] | None = None
+        want_store = (
+            self._fast_path_req is not False
+            and self._cache_term_stats
+            and self._cache_doclens
+            and self.collection_term_count <= self.fast_max_postings
+        )
+        if want_store:
+            # one scan feeds both the store and the term dictionary (the
+            # df/cf sums over each term's bucket shards), in place of
+            # the groupBy("term") job below
+            pdf = self.index.select("term", "df", "cf", "postings").toPandas()
+            sums = pdf.groupby("term", sort=False)[["df", "cf"]].sum()
+            self.term_stats = {
+                t: (int(df), int(cf))
+                for t, df, cf in zip(sums.index, sums["df"], sums["cf"])
+            }
+            shards: dict[str, list[bytes]] = {}
+            for t, blob in zip(pdf["term"], pdf["postings"]):
+                shards.setdefault(t, []).append(bytes(blob))
+            # a term's bucket shards concatenate into one valid frame
+            # stream (absolute first doc); _postings_arrays sorts the
+            # decoded doc ids
+            self._frames = {t: b"".join(v) for t, v in shards.items()}
+        elif self._cache_term_stats:
             self.term_stats = {
                 r.term: (r.df, r.cf)
                 for r in self.index.groupBy("term")
                 .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
                 .collect()
             }
+        if self.term_stats is not None:
             # sorted vocabulary for O(log V) prefix expansion (the
             # reference DAWG's keys(prefix)); a linear dict scan was the
             # serving hot path's only per-query full-vocab pass
             self._term_arr = sorted(self.term_stats)
         # optional driver-side doclen arrays (sorted ids + lengths):
-        # with term_stats this enables the zero-planning-job fast path.
-        # Same memory guard as term_stats — opt in while n_docs fits.
+        # with term_stats this enables the driver fast path (BM25 needs
+        # every scored doc's length without a join).  Same memory guard
+        # as term_stats — opt in while n_docs fits.
         self._doclen_ids: np.ndarray | None = None
         self._doclen_vals: np.ndarray | None = None
         if self._cache_doclens:
@@ -575,8 +607,9 @@ class SearchEngine:
                     r.doc_id: (r.content or "").lower()
                     for r in self.content_df.collect()
                 }
-        # fast path: evaluate small queries driver-side over the decoded
-        # (pruned) postings — the reference's own execution model, kept
+        # fast path: evaluate small queries driver-side over decoded
+        # postings (from the posting store when it loaded, else one
+        # pruned scan) — the reference's own execution model, kept
         # behind a Σdf budget; the distributed plan is always the
         # fallback and the default when the caches are absent.
         fast_path = self._fast_path_req
@@ -2245,10 +2278,12 @@ class SearchEngine:
     # The distributed plan costs 3-5 Spark stages (~0.6-1 s of scheduling
     # at any size); for queries whose pruned postings fit a Σdf budget,
     # the reference's own execution model — decode on the driver, numpy
-    # set algebra / exhaustive BM25 — answers in ONE pruned-scan job
-    # (plus one verify job for phrase leaves).  Results are identical to
-    # the distributed plan (tested per shape); the budget guard falls
-    # back to the distributed plan, which remains the scale path.
+    # set algebra / exhaustive BM25 — answers with no Spark job when the
+    # driver posting store is loaded (see _load; phrase verification
+    # needs the content cache too), else with one pruned-scan job.
+    # Results are identical to the distributed plan (tested per shape);
+    # the budget guard falls back to the distributed plan, which remains
+    # the scale path.
 
     def _postings_arrays(self, terms: list[str]) -> dict[str, tuple[np.ndarray, np.ndarray]]:
         uniq = sorted(set(terms))
@@ -2259,15 +2294,18 @@ class SearchEngine:
             > self.fast_max_postings
         ):
             raise _FastFallback
-        rows = self._index_rows(uniq).select("term", "postings").collect()
+        frames = self._frames
+        if frames is None:
+            frames = {}
+            for r in self._index_rows(uniq).select("term", "postings").collect():
+                # the term's doc-range-disjoint shards concatenate into
+                # one valid frame stream
+                frames[r.term] = frames.get(r.term, b"") + bytes(r.postings)
         postings: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for r in rows:  # concat the term's doc-range-disjoint shards
-            d, t, _ = decode_frames(bytes(r.postings), want_positions=False)
-            if r.term in postings:
-                d0, t0 = postings[r.term]
-                d, t = np.concatenate([d0, d]), np.concatenate([t0, t])
-            postings[r.term] = (d, t)
-        for term, (d, t) in postings.items():
+        for term in uniq:
+            if term not in frames:
+                continue
+            d, t, _ = decode_frames(frames[term], want_positions=False)
             order = np.argsort(d, kind="stable")
             postings[term] = (d[order].astype(np.int64), t[order].astype(np.int64))
         return postings

@@ -25,22 +25,37 @@ def scaled(df, factor: int = 1):
 def local_rows_df(spark: SparkSession, rows, schema: str):
     """Tiny driver-side relation (plans, stats rows, fast-path results).
 
+    Rows are positional: each row is a tuple whose i-th value fills the
+    schema's i-th column, so every row must have exactly as many values
+    as the schema has columns (checked; a short or long row raises
+    ``ValueError`` instead of shifting or dropping values).
+
     ``spark.createDataFrame(list_of_rows)`` parallelizes into
     ``defaultParallelism`` slices — a 32-task job to ship a handful of
     rows (measured ~0.3 s per occurrence on local[32]; optimization
     guide §1.1: scheduler overhead, not compute).  Routing the rows
-    through one Arrow batch (pandas) keeps the relation
-    single-partition; int64/float64/str/bool round-trip bit-identically
-    through Arrow."""
-    import pandas as pd
+    through one Arrow table keeps the relation a driver-local
+    ``LocalRelation``, so collecting it starts no Spark job — also when
+    it is empty, where a pandas frame would fall back to an RDD.
+    int64/float64/str/bool round-trip bit-identically through Arrow."""
+    import pyarrow as pa
     from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
 
     struct = T._parse_datatype_string(schema)
-    names = [f.name for f in struct.fields]
-    pdf = pd.DataFrame(
-        dict(zip(names, zip(*rows))) if rows else {n: [] for n in names}
+    width = len(struct.fields)
+    for row in rows:
+        if len(row) != width:
+            raise ValueError(
+                f"row {row!r} has {len(row)} values; schema {schema!r} "
+                f"has {width} columns"
+            )
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) if rows else [[] for _ in range(width)]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
     )
-    return spark.createDataFrame(pdf, schema=struct)
+    return spark.createDataFrame(table, schema=struct)
 
 
 def get_spark(
