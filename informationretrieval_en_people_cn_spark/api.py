@@ -21,7 +21,6 @@ from pyspark.sql import types as T
 from .functions.analyze import indexed_tokens_expr
 from .operators import pipeline as pl
 from .operators import similarity as sim
-from .operators.build import POSTING_ROW_SCHEMA
 
 # ---------------------------------------------------------------------------
 # shared fragments
@@ -93,11 +92,9 @@ def q_term_stats(spark, sf_dir):
     import numpy as np
     import pandas as pd
 
-    from .functions.codec import decode_frames, encode_frame
+    from .functions.codec import decode_many, encode_many
 
-    tf = _tf_rows(spark, sf_dir).withColumn(
-        "positions", F.array().cast("array<int>")
-    ).withColumn("tf", F.col("tf").cast("int")).select(POSTING_ROW_SCHEMA.names)
+    tf = _tf_rows(spark, sf_dir).select("term", "doc_id", "tf")
 
     dec_schema = T.StructType(
         [
@@ -107,36 +104,47 @@ def q_term_stats(spark, sf_dir):
         ]
     )
 
-    # One exchange hash-partitioned by term, then ONE Python crossing
-    # per task: the old shape (groupBy(term).applyInPandas(encode) →
-    # mapInPandas(decode)) paid per-micro-group pandas overhead for
-    # thousands of 1-row groups plus a second JVM↔Python boundary
-    # (optimization guide §4.1).  Each task buffers its partition's
-    # rows per term (a term is wholly in one partition after the
-    # repartition), then encodes → decodes every term's frame through
-    # the varbyte codec — the round-trip this oracle proves — and emits
-    # (term, df, cf).
+    # One exchange hash-partitioned by term, sorted by (term, doc_id)
+    # within each partition, then ONE Python crossing per task that
+    # streams: each Arrow batch's runs of equal terms are encoded with
+    # one encode_many and decoded back with one decode_many — the
+    # round-trip this oracle proves — and (term, df, cf) is summed from
+    # the decoded postings.  A term that continues past the batch end
+    # carries only its running (df, cf) into the next batch, because
+    # frames of one term concatenate; a task thus holds one batch,
+    # whatever the partition's size or skew.
     def encdec(batches):
-        bufs: dict[str, list[pd.DataFrame]] = {}
+        carry = None  # one-row (term, df, cf) columns of the trailing term
         for pdf in batches:
-            for term, g in pdf.groupby("term", sort=False):
-                bufs.setdefault(term, []).append(g[["doc_id", "tf"]])
-        if not bufs:
-            return
-        terms, dfs, cfs = [], [], []
-        for term, parts in bufs.items():
-            g = pd.concat(parts) if len(parts) > 1 else parts[0]
-            g = g.sort_values("doc_id")
-            frame = encode_frame(
-                g["doc_id"].to_numpy(np.uint64), g["tf"].to_numpy(np.uint64)
+            if pdf.empty:
+                continue
+            terms = pdf["term"].to_numpy(object)
+            starts = np.flatnonzero(np.concatenate(([True], terms[1:] != terms[:-1])))
+            lens = np.diff(np.append(starts, len(terms)))
+            frames = encode_many(
+                lens, pdf["doc_id"].to_numpy(np.uint64), pdf["tf"].to_numpy(np.uint64)
             )
-            d, t, _ = decode_frames(frame, want_positions=False)
-            terms.append(term)
-            dfs.append(len(d))
-            cfs.append(int(t.sum()))
-        yield pd.DataFrame({"term": terms, "df": dfs, "cf": cfs})
+            counts, _, t, _ = decode_many(frames, want_positions=False)
+            df = counts.astype(np.int64)
+            cf = np.add.reduceat(t, np.cumsum(counts) - counts).astype(np.int64)
+            keys = terms[starts]
+            if carry is not None:
+                if carry["term"][0] == keys[0]:
+                    df[0] += carry["df"][0]
+                    cf[0] += carry["cf"][0]
+                else:
+                    yield pd.DataFrame(carry)
+            carry = {"term": keys[-1:], "df": df[-1:], "cf": cf[-1:]}
+            if len(keys) > 1:
+                yield pd.DataFrame({"term": keys[:-1], "df": df[:-1], "cf": cf[:-1]})
+        if carry is not None:
+            yield pd.DataFrame(carry)
 
-    return tf.repartition("term").mapInPandas(encdec, dec_schema)
+    return (
+        tf.repartition("term")
+        .sortWithinPartitions("term", "doc_id")
+        .mapInPandas(encdec, dec_schema)
+    )
 
 
 def q_bm25_scores(spark, sf_dir):

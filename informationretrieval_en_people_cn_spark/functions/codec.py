@@ -1,4 +1,4 @@
-"""Delta + varbyte posting-list codec, numpy-vectorized (C1/C2 rebuilt).
+"""Delta + varbyte posting-list codec with a columnar batch API (C1/C2 rebuilt).
 
 The reference entropy-codes the *decimal digits* of its CSV posting
 lines with a hardcoded 12-symbol Huffman code
@@ -6,15 +6,25 @@ lines with a hardcoded 12-symbol Huffman code
 ``Huffman.py:70-88``).  Per the north_rule, the rebuild replaces that
 with the standard IR codec: doc-gap delta encoding + varbyte
 (7-bit groups, little-endian, continuation bit on all but the last
-byte).  Encode and decode are fully vectorized numpy — no per-value
-Python loops over postings — so they are cheap inside Arrow-batched
-pandas UDFs.
+byte).
+
+The codec works on *batches* of frames.  A median frame holds ~10
+postings, so a per-frame numpy call costs far more in fixed dispatch
+overhead than in work.  :func:`decode_many` therefore decodes a whole
+list of blobs with one varbyte pass over their joined bytes, walks the
+frame headers with plain integer arithmetic, and undoes the deltas
+with one segmented cumsum for doc ids and one for positions.
+:func:`encode_many` scatters every group's values into one array, runs
+one varbyte pass and slices the bytes per group.  Kernels call them
+once per Arrow batch or merge pass; :func:`encode_frame` and
+:func:`decode_frames` are the one-group / one-blob wrappers.
 
 Frame format (one term's postings = one or more concatenated frames;
 frames arise from doc-range slices/salts and concatenate WITHOUT
 re-encoding because every frame's first doc_id is absolute):
 
     varbyte(n)                       # number of docs in this frame
+    varbyte(pos_flag)                # 1 = positions follow, 0 = tf-only
     varbyte(doc_0, gap_1 .. gap_{n-1})   # ascending doc_ids, delta'd
     varbyte(tf_0 .. tf_{n-1})
     varbyte(pos gaps, doc-major)     # per doc: pos_0, gap_1.. (tf_i values)
@@ -28,50 +38,194 @@ from __future__ import annotations
 
 import numpy as np
 
+# a value takes one varbyte byte plus one per limit 2**(7k) it reaches
+_VB_LIMITS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
+_U64 = (1 << 64) - 1
+
+
+def _vb_encode(vals: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Varbyte bytes of ``vals`` (uint64) plus each value's byte count."""
+    nbytes = np.searchsorted(_VB_LIMITS, vals, side="right") + 1
+    ends = np.cumsum(nbytes)
+    starts = ends - nbytes
+    out = np.empty(int(ends[-1]) if ends.size else 0, dtype=np.uint8)
+    low = (vals & np.uint64(0x7F)).astype(np.uint8)
+    out[starts] = np.where(nbytes > 1, low | np.uint8(0x80), low)
+    active = np.flatnonzero(nbytes > 1)
+    rem = vals[active] >> np.uint64(7)
+    g = 1
+    while active.size:
+        last = nbytes[active] == g + 1
+        low = (rem & np.uint64(0x7F)).astype(np.uint8)
+        out[starts[active] + g] = np.where(last, low, low | np.uint8(0x80))
+        keep = ~last
+        active, rem = active[keep], rem[keep] >> np.uint64(7)
+        g += 1
+    return out, nbytes
+
 
 def vb_encode(values: np.ndarray) -> bytes:
     """Varbyte-encode a 1-D array of non-negative ints."""
-    vals = np.asarray(values, dtype=np.uint64)
-    if vals.size == 0:
-        return b""
-    # Number of 7-bit groups per value (at least 1).
-    nbytes = np.ones(vals.shape, dtype=np.int64)
-    rem = vals >> np.uint64(7)
-    while rem.any():
-        nbytes += (rem != 0).astype(np.int64)
-        rem >>= np.uint64(7)
-    total = int(nbytes.sum())
-    out = np.empty(total, dtype=np.uint8)
-    ends = np.cumsum(nbytes)
-    starts = ends - nbytes
-    rem = vals.copy()
-    g = 0
-    active = np.arange(vals.size)
+    return _vb_encode(np.asarray(values, dtype=np.uint64))[0].tobytes()
+
+
+def _vb_values(b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Decoded uint64 values of varbyte bytes ``b`` and the byte index
+    at which each value ends."""
+    ends = np.flatnonzero(b < 0x80)
+    if b.size and (ends.size == 0 or ends[-1] != b.size - 1):
+        raise ValueError("truncated varbyte stream")
+    if ends.size == b.size:  # every value fits one byte
+        return b.astype(np.uint64), ends
+    starts = np.empty_like(ends)
+    starts[0] = 0
+    starts[1:] = ends[:-1] + 1
+    lens = ends - starts + 1
+    vals = (b[starts] & 0x7F).astype(np.uint64)
+    active = np.flatnonzero(lens > 1)
+    g = 1
     while active.size:
-        idx = starts[active] + g
-        is_last = nbytes[active] == g + 1
-        byte = (rem[active] & np.uint64(0x7F)).astype(np.uint8)
-        out[idx] = np.where(is_last, byte, byte | np.uint8(0x80))
-        rem[active] >>= np.uint64(7)
-        active = active[~is_last]
+        vals[active] |= (b[starts[active] + g] & 0x7F).astype(np.uint64) << np.uint64(7 * g)
+        active = active[lens[active] > g + 1]
         g += 1
-    return out.tobytes()
+    return vals, ends
 
 
 def vb_decode(buf: bytes | np.ndarray) -> np.ndarray:
     """Decode a varbyte stream to a uint64 array (vectorized)."""
-    b = np.frombuffer(buf, dtype=np.uint8) if isinstance(buf, (bytes, bytearray, memoryview)) else np.asarray(buf, dtype=np.uint8)
-    if b.size == 0:
-        return np.empty(0, dtype=np.uint64)
-    is_last = (b & 0x80) == 0
-    ends = np.nonzero(is_last)[0]
-    starts = np.empty_like(ends)
-    starts[0] = 0
-    starts[1:] = ends[:-1] + 1
-    # Position of each byte within its value's group sequence.
-    pos = np.arange(b.size, dtype=np.int64) - np.repeat(starts, ends - starts + 1)
-    shifted = (b & np.uint8(0x7F)).astype(np.uint64) << (np.uint64(7) * pos.astype(np.uint64))
-    return np.add.reduceat(shifted, starts)
+    b = (
+        np.frombuffer(buf, dtype=np.uint8)
+        if isinstance(buf, (bytes, bytearray, memoryview))
+        else np.asarray(buf, dtype=np.uint8)
+    )
+    return _vb_values(b)[0]
+
+
+def _seg_cumsum(v: np.ndarray, lens: np.ndarray, first: np.ndarray) -> np.ndarray:
+    """Cumsum of uint64 ``v`` restarting at each consecutive segment
+    (``lens`` values starting at ``first``); wraps mod 2**64, which is
+    exact for the deltas it undoes."""
+    cs = np.concatenate((np.zeros(1, np.uint64), v.cumsum(dtype=np.uint64)))
+    return cs[1:] - np.repeat(cs[first], lens)
+
+
+def _excl_cumsum(lens: np.ndarray) -> np.ndarray:
+    """``[0, l0, l0+l1, ...]`` — segment starts plus the total."""
+    out = np.zeros(lens.size + 1, dtype=np.int64)
+    np.cumsum(lens, out=out[1:])
+    return out
+
+
+def decode_many(blobs, want_positions: bool = True):
+    """Decode a sequence of blobs, each a concatenation of frames.
+
+    Returns ``(counts, doc_ids, tfs, positions)``: ``counts[i]`` is the
+    number of postings blob ``i`` holds, and the three uint64 arrays are
+    every blob's ``decode_frames`` output concatenated in blob order.
+    Positions are empty for tf-only frames, and skipped entirely with
+    ``want_positions=False`` (non-positional plans pay only the byte
+    scan).
+    """
+    nblob = len(blobs)
+    blen = np.fromiter(map(len, blobs), dtype=np.int64, count=nblob)
+    vals, ends = _vb_values(np.frombuffer(b"".join(blobs), dtype=np.uint8))
+    # blobs end on value boundaries: blob i ends after the values whose
+    # last byte precedes its end offset
+    vend = np.searchsorted(ends, np.cumsum(blen), side="left")
+    # header walk: integer arithmetic only; Σtf of a frame is a
+    # difference of the (wrapping) cumsum of all values
+    csum = np.cumsum(vals, dtype=np.uint64)
+    total = vals.size
+    get, cs = vals.item, csum.item
+    f_start, f_n, f_npos = [], [], []
+    o = 0
+    while o < total:
+        if o + 1 >= total:
+            raise ValueError("truncated posting frame")
+        n = get(o)
+        tf_end = o + 1 + 2 * n  # index of the frame's last tf
+        if tf_end >= total:
+            raise ValueError("truncated posting frame")
+        npos = (cs(tf_end) - cs(o + 1 + n)) & _U64 if get(o + 1) else 0
+        f_start.append(o)
+        f_n.append(n)
+        f_npos.append(npos)
+        o = tf_end + 1 + npos
+    if o != total:
+        raise ValueError("truncated posting frame")
+    f_start = np.array(f_start, dtype=np.int64)
+    f_n = np.array(f_n, dtype=np.int64)
+    f_npos = np.array(f_npos, dtype=np.int64)
+    # frames starting before each blob's end; a blob must end on one
+    k = np.searchsorted(f_start, vend, side="left")
+    if np.any(np.append(f_start, total)[k] != vend):
+        raise ValueError("blob does not end on a frame boundary")
+    cum_n = _excl_cumsum(f_n)
+    counts = np.diff(cum_n[k], prepend=0)
+
+    first = cum_n[:-1]
+    idx = np.arange(cum_n[-1]) + np.repeat(f_start + 2 - first, f_n)
+    docs = _seg_cumsum(vals[idx], f_n, first)
+    tfs = vals[idx + np.repeat(f_n, f_n)]
+    if not want_positions or not f_npos.any():
+        return counts, docs, tfs, np.empty(0, dtype=np.uint64)
+    has_pos = f_npos > 0
+    run_lens = (tfs if has_pos.all() else tfs[np.repeat(has_pos, f_n)]).astype(np.int64)
+    f_npos, p_off = f_npos[has_pos], (f_start + 2 + 2 * f_n)[has_pos]
+    cum_p = _excl_cumsum(f_npos)
+    pgaps = vals[np.arange(cum_p[-1]) + np.repeat(p_off - cum_p[:-1], f_npos)]
+    return counts, docs, tfs, _seg_cumsum(pgaps, run_lens, _excl_cumsum(run_lens)[:-1])
+
+
+def encode_many(group_lens, docs, tfs, positions=None) -> list[bytes]:
+    """Encode consecutive posting groups, one frame each.
+
+    Group ``i`` is the next ``group_lens[i]`` entries of ``docs`` /
+    ``tfs`` (doc ids ascending within a group) and, when ``positions``
+    is given, the next Σtf entries of the doc-major ``positions``.
+    Returns one bytes object per group, byte-identical to
+    :func:`encode_frame` on that group (``b""`` for an empty group).
+    """
+    lens = np.asarray(group_lens, dtype=np.int64)
+    docs = np.asarray(docs, dtype=np.uint64)
+    tfs = np.asarray(tfs, dtype=np.uint64)
+    n_post = docs.size
+    if tfs.size != n_post or int(lens.sum()) != n_post:
+        raise ValueError("group_lens, docs and tfs disagree in length")
+    cum_l = _excl_cumsum(lens)
+    p_start = cum_l[:-1]
+    ctf = np.concatenate((np.zeros(1, np.uint64), np.cumsum(tfs, dtype=np.uint64)))
+    if positions is None:
+        g_npos = np.zeros(lens.size, dtype=np.int64)
+    else:
+        positions = np.asarray(positions, dtype=np.uint64)
+        if positions.size != int(ctf[-1]):
+            raise ValueError("positions must hold Σtf values")
+        g_npos = (ctf[cum_l[1:]] - ctf[p_start]).astype(np.int64)
+    nv = np.where(lens > 0, 2 + 2 * lens + g_npos, 0)
+    cum_v = _excl_cumsum(nv)
+    v_start = cum_v[:-1]
+    vals = np.empty(cum_v[-1], dtype=np.uint64)
+    ne = lens > 0
+    vals[v_start[ne]] = lens[ne]
+    vals[v_start[ne] + 1] = g_npos[ne] > 0
+    gaps = docs.copy()
+    np.subtract(docs[1:], docs[:-1], out=gaps[1:])
+    gaps[p_start[ne]] = docs[p_start[ne]]
+    idx = np.arange(n_post, dtype=np.int64) + np.repeat(v_start + 2 - p_start, lens)
+    vals[idx] = gaps
+    vals[idx + np.repeat(lens, lens)] = tfs
+    if g_npos.any():
+        pgaps = positions.copy()
+        np.subtract(positions[1:], positions[:-1], out=pgaps[1:])
+        run_starts = ctf[:-1][tfs > 0].astype(np.int64)
+        pgaps[run_starts] = positions[run_starts]
+        pos_shift = v_start + 2 + 2 * lens - ctf[p_start].astype(np.int64)
+        vals[np.arange(positions.size, dtype=np.int64) + np.repeat(pos_shift, g_npos)] = pgaps
+    out, nbytes = _vb_encode(vals)
+    cb = _excl_cumsum(nbytes)
+    buf = out.tobytes()
+    return [buf[a:b] for a, b in zip(cb[v_start].tolist(), cb[cum_v[1:]].tolist())]
 
 
 def encode_frame(
@@ -86,29 +240,9 @@ def encode_frame(
     (tf-only index).
     """
     doc_ids = np.asarray(doc_ids, dtype=np.uint64)
-    tfs = np.asarray(tfs, dtype=np.uint64)
-    n = doc_ids.size
-    if n == 0:
-        return b""
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = doc_ids[0]
-    np.subtract(doc_ids[1:], doc_ids[:-1], out=gaps[1:])
-    if positions is None or len(positions) == 0:
-        pos_bytes = b""
-        pos_flag = 0
-    else:
-        positions = np.asarray(positions, dtype=np.uint64)
-        # delta within each doc's position run
-        pgaps = positions.copy()
-        run_starts = np.cumsum(tfs)[:-1].astype(np.int64)
-        pgaps[1:] = positions[1:] - positions[:-1]
-        pgaps[0] = positions[0]
-        if run_starts.size:
-            pgaps[run_starts] = positions[run_starts]
-        pos_bytes = vb_encode(pgaps)
-        pos_flag = 1
-    header = vb_encode(np.array([n, pos_flag], dtype=np.uint64))
-    return header + vb_encode(gaps) + vb_encode(tfs) + pos_bytes
+    if positions is not None and len(positions) == 0:
+        positions = None
+    return encode_many([doc_ids.size], doc_ids, tfs, positions)[0]
 
 
 def decode_frames(buf: bytes, want_positions: bool = True):
@@ -119,66 +253,10 @@ def decode_frames(buf: bytes, want_positions: bool = True):
     frames were produced from disjoint ascending doc ranges (the build
     invariant).
 
-    ``want_positions=False`` SKIPS the position payload (the frame
-    header makes its byte length computable from Σtf without decoding):
-    on a positional index, non-positional plans — keyword, boolean,
-    BM25 — pay only the byte scan, not the (≈Σdoclen-sized)
-    position-list materialization.  Positions come back empty.
+    ``want_positions=False`` skips the position payload: on a
+    positional index, non-positional plans — keyword, boolean, BM25 —
+    pay only the byte scan, not the (≈Σdoclen-sized) position-list
+    materialization.  Positions come back empty.
     """
-    b = np.frombuffer(buf, dtype=np.uint8)
-    all_docs, all_tfs, all_pos = [], [], []
-    off = 0
-    is_last = (b & 0x80) == 0
-    val_ends = np.nonzero(is_last)[0]
-    while off < b.size:
-        # decode header: two varbyte values starting at off
-        e0 = val_ends[np.searchsorted(val_ends, off)]
-        n = int(vb_decode(b[off : e0 + 1])[0])
-        off2 = e0 + 1
-        e1 = val_ends[np.searchsorted(val_ends, off2)]
-        pos_flag = int(vb_decode(b[off2 : e1 + 1])[0])
-        off = e1 + 1
-        # doc gaps: n values
-        i = np.searchsorted(val_ends, off)
-        doc_end = val_ends[i + n - 1]
-        gaps = vb_decode(b[off : doc_end + 1])
-        off = doc_end + 1
-        # tfs: n values
-        i = np.searchsorted(val_ends, off)
-        tf_end = val_ends[i + n - 1]
-        tfs = vb_decode(b[off : tf_end + 1])
-        off = tf_end + 1
-        docs = np.cumsum(gaps, dtype=np.uint64)
-        all_docs.append(docs)
-        all_tfs.append(tfs)
-        if pos_flag:
-            npos = int(tfs.sum())
-            i = np.searchsorted(val_ends, off)
-            p_end = val_ends[i + npos - 1]
-            if not want_positions:  # skip the payload, keep the offset
-                off = p_end + 1
-                continue
-            pgaps = vb_decode(b[off : p_end + 1])
-            off = p_end + 1
-            # undo doc-major delta: cumsum within each doc run
-            pos = np.cumsum(pgaps, dtype=np.uint64)
-            run_starts = np.cumsum(tfs)[:-1].astype(np.int64)
-            if run_starts.size:
-                # subtract the carried-over cumsum at each run start
-                carry = np.zeros(npos, dtype=np.uint64)
-                carry_vals = pos[run_starts - 1]
-                carry[run_starts] = carry_vals
-                # propagate carry within runs via cumsum of a reset trick
-                reset = np.zeros(npos, dtype=np.uint64)
-                reset[run_starts] = carry_vals
-                # positions within run r must subtract pos[run_start-1]
-                seg_id = np.zeros(npos, dtype=np.int64)
-                seg_id[run_starts] = 1
-                seg_id = np.cumsum(seg_id)
-                sub = np.concatenate(([np.uint64(0)], carry_vals))[seg_id]
-                pos = pos - sub
-            all_pos.append(pos)
-    docs = np.concatenate(all_docs) if all_docs else np.empty(0, np.uint64)
-    tfs = np.concatenate(all_tfs) if all_tfs else np.empty(0, np.uint64)
-    pos = np.concatenate(all_pos) if all_pos else np.empty(0, np.uint64)
+    _, docs, tfs, pos = decode_many([buf], want_positions)
     return docs, tfs, pos

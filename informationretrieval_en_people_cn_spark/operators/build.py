@@ -56,7 +56,7 @@ from pyspark.sql import types as T
 
 from .. import checkpoint as ckpt
 from ..functions.analyze import analyze_batch
-from ..functions.codec import decode_frames, encode_frame
+from ..functions.codec import decode_many, encode_many
 from ..session import local_rows_df
 
 POSTING_ROW_SCHEMA = T.StructType(
@@ -99,6 +99,12 @@ INDEX_SCHEMA = T.StructType(
         T.StructField("blocks", BLOCKS_TYPE, False),
     ]
 )
+
+# Postings a build task holds decoded at once: the run writer flushes
+# after this many tokens and the merge decodes at most this many
+# postings per pass, so task memory is bounded by a constant rather than
+# by the partition or bucket.
+FLUSH_SIZE = 4_000_000
 
 # collection stats + the doc-range bucket grid (lo/span/count) the build
 # salted on — stored so query-time bucket assignment is O(1) arithmetic
@@ -156,7 +162,7 @@ def partition_runs(
     buckets: int,
     use_stemmer: bool = True,
     store_positions: bool = True,
-    flush_tokens: int = 4_000_000,
+    flush_tokens: int = FLUSH_SIZE,
 ) -> DataFrame:
     """One NARROW pass: tokenize each input partition and emit encoded
     posting-frame runs keyed by (term, salt-bucket).
@@ -171,36 +177,44 @@ def partition_runs(
     def gen(batches):
         import pandas as pd
 
-        acc: dict[tuple[str, int], tuple[list, list, list]] = {}
-        n_tok = 0
+        # one entry per (doc, term) posting, in arrival order; ``keys``
+        # numbers the (term, bucket) groups in first-seen order
+        keys: dict[tuple[str, int], int] = {}
+        kid, docs, tfs, pos = [], [], [], []
 
         def flush():
-            nonlocal acc, n_tok
-            if not acc:
+            nonlocal keys, kid, docs, tfs, pos
+            if not keys:
                 return None
-            cols = {k: [] for k in ("term", "salt", "first_doc", "df", "cf", "frame")}
-            for (term, bucket), (docs, tfs, plists) in acc.items():
-                d = np.asarray(docs, dtype=np.uint64)
-                t = np.asarray(tfs, dtype=np.uint64)
-                order = np.argsort(d, kind="stable")
-                d, t = d[order], t[order]
-                pos = None
-                if store_positions:
-                    pos = np.concatenate(
-                        [np.asarray(plists[i], dtype=np.uint64) for i in order]
-                    )
-                cols["term"].append(term)
-                cols["salt"].append(bucket)
-                cols["first_doc"].append(int(d[0]))
-                cols["df"].append(len(d))
-                cols["cf"].append(int(t.sum()))
-                cols["frame"].append(encode_frame(d, t, pos))
-            acc = {}
-            n_tok = 0
-            return pd.DataFrame(cols)
+            k = np.asarray(kid, dtype=np.int64)
+            d = np.asarray(docs, dtype=np.uint64)
+            t = np.asarray(tfs, dtype=np.uint64)
+            order = np.lexsort((d, k))
+            p = (
+                _reorder_positions(np.asarray(pos, dtype=np.uint64), t, order)
+                if store_positions
+                else None
+            )
+            d, t = d[order], t[order]
+            df = np.bincount(k, minlength=len(keys))
+            starts = np.cumsum(df) - df
+            term, salt = zip(*keys)
+            out = pd.DataFrame(
+                {
+                    "term": term,
+                    "salt": salt,
+                    "first_doc": d[starts].astype(np.int64),
+                    "df": df,
+                    "cf": np.add.reduceat(t, starts).astype(np.int64),
+                    "frame": encode_many(df, d, t, p),
+                }
+            )
+            keys, kid, docs, tfs, pos = {}, [], [], [], []
+            return out
 
         from collections import Counter
 
+        n_tok = 0
         for pdf in batches:
             terms_lists = analyze_batch(pdf["content"], use_stemmer=use_stemmer)
             for doc_id, terms in zip(pdf["doc_id"], terms_lists):
@@ -213,19 +227,19 @@ def partition_runs(
                     for p, term in enumerate(terms):
                         groups.setdefault(term, []).append(p)
                     for term, plist in groups.items():
-                        e = acc.setdefault((term, bucket), ([], [], []))
-                        e[0].append(doc_id)
-                        e[1].append(len(plist))
-                        e[2].append(plist)
+                        kid.append(keys.setdefault((term, bucket), len(keys)))
+                        docs.append(doc_id)
+                        tfs.append(len(plist))
+                        pos.extend(plist)
                 else:  # tf-only: C-speed multiset count
                     for term, tf in Counter(terms).items():
-                        e = acc.setdefault((term, bucket), ([], [], []))
-                        e[0].append(doc_id)
-                        e[1].append(tf)
-                        e[2].append(None)
+                        kid.append(keys.setdefault((term, bucket), len(keys)))
+                        docs.append(doc_id)
+                        tfs.append(tf)
                 n_tok += len(terms)
             if n_tok >= flush_tokens:
                 out = flush()
+                n_tok = 0
                 if out is not None:
                     yield out
         out = flush()
@@ -258,56 +272,88 @@ def _merge_bucket(block_size: int):
     |index| / buckets **regardless of term skew**: a Zipf-head term's
     postings spread evenly over every bucket by construction (the
     doc-range refinement of the salted repartition-by-term merge).
-    Inside the bucket, terms merge with a fast pandas groupby + numpy
-    loop — per-term Spark group overhead would dominate at 10^4-10^6
-    (term, bucket) micro-groups, so grouping happens HERE, not in the
-    shuffle key.
+    Grouping by term happens HERE, not in the shuffle key — per-term
+    Spark group overhead would dominate at 10^4-10^6 (term, bucket)
+    micro-groups.
+
+    The merge is columnar: terms are factorized, and each pass decodes
+    its frames with one ``decode_many``, orders the postings with one
+    ``lexsort`` by (term, doc), derives df / cf / first_doc and the
+    block-max ``(last_doc, max_tf)`` pairs with ``bincount`` /
+    ``reduceat``, and re-encodes every term with one ``encode_many``.
+    A pass holds at most ``FLUSH_SIZE`` postings, cut at term
+    boundaries (a larger term is a pass of its own), so memory is
+    bounded by a constant rather than by the bucket.
 
     Frames per term hold disjoint doc sets (each doc is tokenized by
-    exactly one run), so merging is decode → argsort → re-encode; the
+    exactly one run), so merging is decode → sort → re-encode; the
     output is byte-identical no matter how the corpus was partitioned.
     """
+
+    def merge_pass(terms, codes, frames, bucket):
+        counts, d, t, p = decode_many(frames)
+        term = np.repeat(codes, counts)
+        order = np.lexsort((d, term))
+        pos = None
+        if p.size:
+            if p.size != int(t.sum()):
+                raise ValueError("runs mix positional and tf-only frames")
+            pos = _reorder_positions(p, t, order)
+        d, t = d[order], t[order]
+        df = np.bincount(term - codes[0], minlength=len(terms))
+        starts = np.cumsum(df) - df
+        # block b of a term covers its postings [start + b*size, +size)
+        nblk = -(-df // block_size)
+        blk_end = np.cumsum(nblk)
+        b_start = np.repeat(starts, nblk) + block_size * (
+            np.arange(blk_end[-1]) - np.repeat(blk_end - nblk, nblk)
+        )
+        b_last = np.minimum(b_start + block_size, np.repeat(starts + df, nblk)) - 1
+        blocks = [
+            {"last_doc": ld, "max_tf": mt}
+            for ld, mt in zip(
+                d[b_last].astype(np.int64).tolist(),
+                np.maximum.reduceat(t, b_start).tolist(),
+            )
+        ]
+        bounds = np.concatenate(([0], blk_end)).tolist()
+        return {
+            "term": terms,
+            "bucket": bucket,
+            "first_doc": d[starts].astype(np.int64),
+            "df": df,
+            "cf": np.add.reduceat(t, starts).astype(np.int64),
+            "postings": encode_many(df, d, t, pos),
+            "blocks": [blocks[a:b] for a, b in zip(bounds[:-1], bounds[1:])],
+        }
 
     def fn(pdf):
         import pandas as pd
 
-        cols = {
-            "term": [], "bucket": [], "first_doc": [], "df": [], "cf": [],
-            "postings": [], "blocks": [],
-        }
         # all rows in this group share one doc-range bucket (the group
         # key); stored so queries can align rows ACROSS terms on the
         # shared bucket grid (distributed block-max pruning)
         bucket = int(pdf["salt"].iloc[0])
-        for term, g in pdf.groupby("term", sort=True):
-            all_d, all_t, all_p = [], [], []
-            for frame in g["frame"]:
-                d, t, p = decode_frames(bytes(frame))
-                all_d.append(d)
-                all_t.append(t)
-                all_p.append(p)
-            d0 = np.concatenate(all_d)
-            t0 = np.concatenate(all_t)
-            p = np.concatenate(all_p)
-            order = np.argsort(d0, kind="stable")
-            d, t = d0[order], t0[order]
-            pos = _reorder_positions(p, t0, order) if p.size else None
-            cols["term"].append(term)
-            cols["bucket"].append(bucket)
-            cols["first_doc"].append(int(d[0]))
-            cols["df"].append(len(d))
-            cols["cf"].append(int(t.sum()))
-            cols["postings"].append(encode_frame(d, t, pos))
-            cols["blocks"].append(
-                [
-                    {
-                        "last_doc": int(d[min(i + block_size, len(d)) - 1]),
-                        "max_tf": int(t[i : i + block_size].max()),
-                    }
-                    for i in range(0, len(d), block_size)
-                ]
+        codes, terms = pd.factorize(pdf["term"], sort=True)
+        terms = np.asarray(terms, dtype=object)
+        rows = np.argsort(codes, kind="stable")
+        codes = codes[rows]
+        frames = pdf["frame"].to_numpy()[rows]
+        # term i owns rows [t_row[i], t_row[i+1]) and postings
+        # [t_post[i], t_post[i+1])
+        t_row = np.searchsorted(codes, np.arange(len(terms) + 1))
+        t_post = np.concatenate(([0], np.cumsum(pdf["df"].to_numpy(np.int64)[rows])))[t_row]
+        parts = []
+        i = 0
+        while i < len(terms):
+            j = int(np.searchsorted(t_post, t_post[i] + FLUSH_SIZE, side="right")) - 1
+            j = max(j, i + 1)
+            r0, r1 = t_row[i], t_row[j]
+            parts.append(
+                pd.DataFrame(merge_pass(terms[i:j], codes[r0:r1], frames[r0:r1], bucket))
             )
-        return pd.DataFrame(cols)
+            i = j
+        return pd.concat(parts, ignore_index=True) if len(parts) > 1 else parts[0]
 
     return fn
 
@@ -335,17 +381,10 @@ def _doclens_from_runs(runs: DataFrame) -> DataFrame:
         import pandas as pd
 
         for pdf in batches:
-            docs_out, tfs_out = [], []
-            for frame in pdf["frame"]:
-                d, t, _ = decode_frames(bytes(frame), want_positions=False)
-                docs_out.append(d.astype(np.int64))
-                tfs_out.append(t.astype(np.int64))
-            if docs_out:
+            _, d, t, _ = decode_many(pdf["frame"], want_positions=False)
+            if d.size:
                 yield pd.DataFrame(
-                    {
-                        "doc_id": np.concatenate(docs_out),
-                        "tf": np.concatenate(tfs_out),
-                    }
+                    {"doc_id": d.astype(np.int64), "tf": t.astype(np.int64)}
                 )
 
     return runs.select("frame").mapInPandas(gen, schema)

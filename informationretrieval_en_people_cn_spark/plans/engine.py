@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.analyze import analyze_text
-from ..functions.codec import decode_frames
+from ..functions.codec import decode_frames, decode_many
 from . import querytree as qt
 
 _DECODED_SCHEMA = T.StructType(
@@ -120,20 +120,14 @@ def decode_postings_df(index_rows: DataFrame) -> DataFrame:
         import pandas as pd
 
         for pdf in batches:
-            frames = []
-            for term, buf in zip(pdf["term"], pdf["postings"]):
-                d, t, _ = decode_frames(buf, want_positions=False)
-                frames.append(
-                    pd.DataFrame(
-                        {
-                            "term": term,
-                            "doc_id": d.astype(np.int64),
-                            "tf": t.astype(np.int64),
-                        }
-                    )
-                )
-            if frames:
-                yield pd.concat(frames, ignore_index=True)
+            counts, d, t, _ = decode_many(pdf["postings"], want_positions=False)
+            yield pd.DataFrame(
+                {
+                    "term": np.repeat(pdf["term"].to_numpy(object), counts),
+                    "doc_id": d.astype(np.int64),
+                    "tf": t.astype(np.int64),
+                }
+            )
 
     return index_rows.select("term", "postings").mapInPandas(gen, _DECODED_SCHEMA)
 
@@ -768,22 +762,22 @@ class SearchEngine:
 
         def dec(batches):
             for pdf in batches:
-                out_t, out_d, out_p = [], [], []
-                for term, buf in zip(pdf["term"], pdf["postings"]):
-                    d, t, p = decode_frames(bytes(buf))
-                    if p.size == 0:
-                        raise ValueError(
-                            "positional phrase query needs an index built "
-                            "with store_positions=True"
-                        )
-                    ends = np.cumsum(t).astype(np.int64)
-                    starts = ends - t.astype(np.int64)
-                    for i in range(len(d)):
-                        out_t.append(term)
-                        out_d.append(int(d[i]))
-                        out_p.append(p[starts[i] : ends[i]].astype(np.int64).tolist())
+                if pdf.empty:
+                    continue
+                counts, d, t, p = decode_many(pdf["postings"])
+                if p.size != int(t.sum()):
+                    raise ValueError(
+                        "positional phrase query needs an index built "
+                        "with store_positions=True"
+                    )
                 yield pd.DataFrame(
-                    {"term": out_t, "doc_id": out_d, "positions": out_p}
+                    {
+                        "term": np.repeat(pdf["term"].to_numpy(object), counts),
+                        "doc_id": d.astype(np.int64),
+                        "positions": np.split(
+                            p.astype(np.int64), np.cumsum(t[:-1]).astype(np.int64)
+                        ),
+                    }
                 )
 
         return rows.select("term", "postings").mapInPandas(dec, dec_schema)
